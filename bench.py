@@ -1,7 +1,28 @@
-"""Headline benchmark: runs representative engine queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""Headline benchmark: wall times of registry queries on
+local[$SPARK_GRAFT_CPUS], plain or paired against a git ref.
+
+    python bench.py [--sf N] [query ...]
+    python bench.py [--sf N] --base REF [query ...]
+
+Plain mode times the selected registry entries (the 22 of HEADLINE by
+default) plus their layout twins — the same LogsQL text over the
+day-partitioned, sidecar-indexed copy — and prints ONE JSON line with
+every query's best and median and, when any query has a twin, the
+layout section. `--sf 0.001/0.01/0.1` reads the testdata tree (default
+$SPARK_GRAFT_SF_DIR or sf0.1) and writes no file into the repo; `--sf 1`
+reads the derived 10x replica `.bench_sf1`, built by tools/make_sf1.py
+on first use.
+
+With `--base REF` it checks REF out into a temporary `git worktree`
+and runs PAIRS pairs of fresh plain-mode processes, alternating which
+arm goes first. Both arms run THIS file's timing code; each imports its
+own `victorialogs_spark` on the driver and in the Python workers. Per
+query it prints each arm's median and quartiles over the pairs, the
+ratio of the medians and how many pairs HEAD won, in one JSON line. A
+query "regressed" when HEAD loses at least 9 of 10 pairs and its median
+is worse than base's by more than base's interquartile range;
+"improved" is the mirror rule. The exit status is 1 if any query
+regressed.
 
 Query wall-times are per-query (action = noop-format write, which
 materializes every output column — a `.count()` action would let Catalyst
@@ -11,364 +32,22 @@ scan so JVM/codegen startup doesn't dominate.
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import json
 import os
 import re
+import shutil
+import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
+HERE = os.path.dirname(os.path.abspath(__file__))
 
-# A session-wide median ratio above this is itself suspicious: drift
-# normalization (below) exists to absorb co-tenant contention, but it
-# cannot distinguish host noise from a GENUINE uniform regression (e.g.
-# a session-conf change slowing every query equally). Past this factor
-# the bench refuses to stay silent.
-DRIFT_BACKSTOP = 1.3
-
-# Per-query adjudication table — the guard's memory of flags that were
-# investigated with fresh-process stage attribution and adjudicated as
-# measurement-state artifacts, NOT regressions (the anchor names the
-# SCALE.md section holding the evidence). Without this, a query whose
-# cold-session and warm-protocol floors differ re-flags every time the
-# PRIOR round's context flips (p_sort_desc_rank flagged in r11, r12 and
-# r13 for exactly this). A median-only flag is suppressed into the
-# artifact's `adjudicated_flags` (still visible, no longer a regression)
-# only when the CURRENT run sits inside the adjudicated envelope:
-# median within `median_band` AND best-of at-or-under `best_max` — a
-# genuine slowdown pushes either bound and still flags.
-ADJUDICATIONS = {
-    "dp_minhash_lsh": {
-        "sf": 1.0,
-        "anchor": "SCALE.md 'Fourth-session bench runs' (r15): the"
-                  " 1.12 s sf1 prior best was a quiet-window outlier"
-                  " (history band 1.66-2.7 across sessions); no commit"
-                  " after it touches dedup.py, and the isolated"
-                  " re-measure best is 1.66 with the same plan. The"
-                  " Arrow sketch UDF is the bench's most"
-                  " CPU-contention-sensitive stage. Plan-identity:"
-                  " plans/r16/dp_minhash_lsh_r16.txt (same two-shuffle"
-                  " join-free shape; r16 attribution re-measured the"
-                  " sketch stage at the overhead floor and rejected"
-                  " the sig-join-back and 2D-reduceat variants).",
-        "median_band": (1.2, 3.0),
-        "best_max": 2.4,
-    },
-    "p_sort_desc_rank": {
-        "sf": 0.1,
-        "anchor": "SCALE.md 'p_sort_desc_rank median jitter adjudicated'"
-                  " (r13): warm-protocol median 0.31-0.45, cold-session"
-                  " ~0.52; steady-state execution ~100 ms, rest is"
-                  " driver planning + JIT. Plan-identity: the r15"
-                  " staged/typed-tiebreak plan"
-                  " (plans/r15/p_sort_desc_rank_after.txt) is unchanged"
-                  " in r16 (plans/r16/p_sort_desc_rank_r16.txt — value"
-                  " is provenance-marked, so the r16 Arrow text-key"
-                  " path does not fire here); cold/warm spread"
-                  " re-observed this round (0.33-0.51 best across"
-                  " fresh sessions).",
-        "median_band": (0.25, 0.60),
-        "best_max": 0.50,  # cold isolated best 0.442
-    },
-    "p_unpack_json": {
-        "sf": 0.1,
-        "anchor": "SCALE.md 'unpack_json nested flatten: probe cost"
-                  " accepted' (r15): the plan-time nested-object probe"
-                  " (one single-column limit-1 scan, ~0.2 s at sf0.1)"
-                  " routes flat JSON to the JVM path and nested JSON to"
-                  " the reference-exact Arrow flattener — it retired the"
-                  " recursive-flatten divergence; interleaved A/B:"
-                  " gated-substring probe variant measured equal and"
-                  " rejected. Prior best 0.52 → 0.81 full / 0.51 layout."
-                  " Plan-identity: plans/r16/p_unpack_json_after.txt"
-                  " (single from_json parse, no inference scan on the"
-                  " fields-projected path) and"
-                  " p_unpack_json_infer_scan.txt (the inference path's"
-                  " probe scans read ONLY struct<props:string> —"
-                  " ReadSchema verified r16).",
-        "median_band": (0.30, 1.10),
-        "best_max": 1.00,
-    },
-    "s_time_bucket": {
-        "sf": 0.1,
-        "anchor": "SCALE.md 's_time_bucket driver flag adjudicated'"
-                  " (r15): the r14 sub-us clamp is plan-time Python"
-                  " max() on a constant - executed plan proved"
-                  " byte-identical (norm'd expr ids) to the pre-clamp"
-                  " build, and interleaved clamp-vs-preclamp A/B"
-                  " medians agree (0.238 vs 0.244); driver best 0.215"
-                  " vs prior 0.204 is host burst on an unchanged plan."
-                  " Plan-identity: plans/r16/s_time_bucket_r16.txt"
-                  " (same two-phase aggregate, bucket expr"
-                  " pre-shuffle).",
-        "median_band": (0.15, 0.45),
-        "best_max": 0.30,
-    },
-    "dp_exact_dedup": {
-        "sf": 0.1,
-        "anchor": "SCALE.md 'dp_exact_dedup reproducible 2x adjudicated'"
-                  " (r12): bench-context best 0.209/median 0.236, cold"
-                  " isolated median up to 0.346 — cold-JIT + drift."
-                  " Plan-identity: plans/r16/dp_exact_dedup_r16.txt"
-                  " (same single hash-shuffle groupBy on the md5"
-                  " fingerprint as the r12 record).",
-        "median_band": (0.12, 0.40),
-        "best_max": 0.35,
-    },
-}
-
-# Committed per-round medians history. Round 9 proved the prior-lookup
-# cannot depend on the driver's BENCH_r{N}.json artifacts: the driver
-# captures only the last ~2000 chars of output, r8's verbose JSON line
-# outgrew that window, the artifact recorded `parsed: null`, and the r9
-# guard ran with an EMPTY prior — silently missing 8-17x median swings
-# (host contention, adjudicated by A/B, but the guard couldn't say so).
-# The bench now appends each round's medians here itself and reads
-# priors from the newest line, independent of any capture window.
-HISTORY_FILE = "BENCH_HISTORY.jsonl"
-
-# Host-quietness probe thresholds (pure-shell 32-way + 1-way sha256 over
-# /dev/zero — no Spark, no repo code, so it cannot be confused by a code
-# regression). On a quiet host this machine measures 1-way ~0.35-0.5 s
-# and 32-way ~0.7-1.0 s; during the documented co-tenant epochs (SCALE.md
-# r15: 19 consecutive backstopped bench runs over 5.5 h) the 1-way wall
-# alone ran 0.44 -> 1.9 s. The probe detects bursts and heavy epochs; a
-# run can still probe quiet and trip the drift backstop, which is why the
-# backstop (not the probe) stays the gate of record.
-PROBE_WIDE_QUIET = 1.3
-PROBE_ONE_QUIET = 0.6
-
-
-def host_probe(width: int = 32) -> tuple[float, float]:
-    """(wide_sec, one_sec): wall time of `width` concurrent sha256 pipes
-    over /dev/zero, then of a single one. Pure shell — measures the host,
-    not the repo."""
-    import subprocess
-
-    cmd = "head -c 80000000 /dev/zero | sha256sum > /dev/null"
-    t0 = time.monotonic()
-    ps = [subprocess.Popen(cmd, shell=True) for _ in range(width)]
-    for p in ps:
-        p.wait()
-    wide = time.monotonic() - t0
-    t0 = time.monotonic()
-    subprocess.run(cmd, shell=True)
-    one = time.monotonic() - t0
-    return round(wide, 3), round(one, 3)
-
-
-def wait_for_quiet_host(
-    max_wait_sec: float = 240.0, interval_sec: float = 20.0
-) -> tuple[float, float, bool]:
-    """Probe until quiet or the wait budget runs out. Returns the LAST
-    probe (wide, one, quiet). Bounded: the driver has a time budget, so
-    this trades at most ~4 min for a usable measurement epoch."""
-    deadline = time.monotonic() + max_wait_sec
-    while True:
-        wide, one = host_probe()
-        quiet = wide < PROBE_WIDE_QUIET and one < PROBE_ONE_QUIET
-        if quiet or time.monotonic() + interval_sec > deadline:
-            return wide, one, quiet
-        print(
-            f"# host probe busy (32way={wide:.2f}s 1way={one:.2f}s), "
-            f"waiting {interval_sec:.0f}s for a quiet window",
-            file=sys.stderr,
-        )
-        time.sleep(interval_sec)
-
-
-def load_history_priors(here: str, sf, cpus: int = 32) -> tuple[dict, str | None]:
-    """Return (record, baseline_label) for the newest BENCH_HISTORY.jsonl
-    line whose sf AND cpus match this run's (a sf0.01 iteration run must
-    never become the baseline for the driver's sf0.1 run, and — r15's
-    lesson — an 8-core scaling run must never become the baseline for a
-    32-core run: the r15 driver's 8-core sweep appended a line that would
-    have poisoned every r16 ratio by ~2x). Lines written before the cpus
-    field are all 32-core runs (session.py's default). The record carries
-    query_medians / layout_query_medians and, from r11 on, query_bests /
-    layout_query_bests (used to pre-triage median-only flags as
-    noise-shaped). Missing/empty history -> ({}, None): the guard then
-    reports host_drift_factor null, NOT a fabricated 1.0."""
-    path = os.path.join(here, HISTORY_FILE)
-    try:
-        with open(path) as fh:
-            lines = [json.loads(ln) for ln in fh if ln.strip()]
-    except (OSError, ValueError):
-        return {}, None
-    for rec in reversed(lines):
-        # lines without a protocol predate the field and were all
-        # written by this file's full fresh-process run — treat as such
-        proto = rec.get("protocol", "bench-full-fresh-process")
-        if (
-            rec.get("sf") == sf
-            and rec.get("cpus", 32) == cpus
-            and rec.get("query_medians")
-            and proto == "bench-full-fresh-process"
-        ):
-            label = f"{HISTORY_FILE}:r{rec.get('round', '?')}"
-            return rec, label
-    return {}, None
-
-
-def append_history(
-    here: str,
-    round_no,
-    sf,
-    medians: dict,
-    layout_medians: dict,
-    bests: dict | None = None,
-    layout_bests: dict | None = None,
-    cpus: int = 32,
-    drift: float | None = None,
-    probe: dict | None = None,
-) -> None:
-    """Append (or replace, when re-run within the same round) this run's
-    medians (+ best-of times, used by the next round's guard to label
-    median-only regressions as noise-shaped). Rewrite-in-place on same
-    (round, sf, cpus) so local re-runs while iterating don't stack
-    duplicate baselines, while a scaling run at another core count gets
-    its own line instead of clobbering the 32-core baseline (that
-    clobbering is exactly how the r15 driver's degraded run replaced the
-    quiet-epoch r15 prior). Records cpus + the run's measured drift and
-    host-probe walls so future guards and judges can audit the epoch the
-    line was taken in."""
-    path = os.path.join(here, HISTORY_FILE)
-    rec = {
-        "round": round_no,
-        "sf": sf,
-        "cpus": cpus,
-        "query_medians": medians,
-        "layout_query_medians": layout_medians,
-        # HOW this line was measured, so a future A/B harness appending
-        # warm-validation numbers can't silently become the fresh-process
-        # baseline (cold vs warm floors differ by ~1.6x on tiny queries —
-        # the p_sort_desc_rank adjudication); load_history_priors only
-        # compares like-for-like
-        "protocol": "bench-full-fresh-process",
-    }
-    if drift is not None:
-        rec["drift"] = drift
-    if probe:
-        rec["host_probe"] = probe
-    if bests:
-        rec["query_bests"] = bests
-    if layout_bests:
-        rec["layout_query_bests"] = layout_bests
-    lines: list[dict] = []
-    try:
-        with open(path) as fh:
-            lines = [json.loads(ln) for ln in fh if ln.strip()]
-    except (OSError, ValueError):
-        lines = []
-    lines = [
-        r for r in lines
-        if not (
-            r.get("round") == round_no
-            and r.get("sf") == sf
-            and r.get("cpus", 32) == cpus
-        )
-    ]
-    lines.append(rec)
-    with open(path, "w") as fh:
-        for r in lines:
-            fh.write(json.dumps(r, sort_keys=True) + "\n")
-
-
-def compute_regression_flags(
-    medians: dict[str, float],
-    prior_medians: dict[str, float],
-    bests: dict[str, float] | None = None,
-    prior_bests: dict[str, float] | None = None,
-    sf: float | None = None,
-    adjudications: dict | None = None,
-) -> dict:
-    """Round-over-round regression detection on query MEDIANS.
-
-    When best-of times are available for both rounds, each flag is
-    annotated with `best_ratio`; a flag whose median regressed >1.25x
-    while best-of stayed <= 1.1x is labeled `noise_shaped: true` — the
-    signature of co-tenant bursts hitting SOME hot runs (median moves,
-    best doesn't), pre-triaging the flag without hiding it. Rounds 8-10
-    adjudicated exactly this shape by manual same-host A/B three times;
-    this bakes that adjudication into the artifact.
-
-    Host-drift normalization: when co-tenant contention inflates the
-    whole session, EVERY query's ratio shifts together (measured: the
-    same binary produced 9 simultaneous 1.25-1.43x "regressions" on
-    untouched queries in one run and none in the next). The median
-    per-query ratio estimates that common factor; a real localized
-    regression is a query whose ratio stands out ABOVE the session's
-    drift, so flags use drift-normalized ratios, with the factor
-    recorded. BACKSTOP: normalization makes the guard blind to a
-    regression affecting >= half the queries — so when the drift factor
-    itself exceeds DRIFT_BACKSTOP, that is flagged separately with the
-    raw >1.25x queries listed, forcing a human look at whether the
-    "drift" is actually a uniform code regression."""
-    ratios = {
-        n: medians[n] / prior_medians[n]
-        for n in medians
-        if prior_medians.get(n, 0) > 0
-    }
-    # no prior at all -> the guard DID NOT RUN; say null, never a
-    # fabricated 1.0 (r9's artifact recorded 1.0 with an empty prior,
-    # which read as "checked, clean" when nothing was checked)
-    if not ratios:
-        return {
-            "regressions": {},
-            "adjudicated": {},
-            "host_drift_factor": None,
-            "drift_backstop_exceeded": False,
-            "uniform_slowdown_raw": {},
-        }
-    drift = 1.0
-    if len(ratios) >= 5:
-        rs = sorted(ratios.values())
-        drift = max(1.0, rs[len(rs) // 2])
-    regressions: dict[str, dict] = {}
-    adjudicated: dict[str, dict] = {}
-    for name, med in medians.items():
-        pm = prior_medians.get(name)
-        if pm and pm > 0 and (med / pm) / drift > 1.25:
-            flag = {
-                "prior_median": pm,
-                "median": med,
-                "ratio": round(med / pm, 3),
-                "drift_normalized_ratio": round((med / pm) / drift, 3),
-            }
-            b = (bests or {}).get(name)
-            pb = (prior_bests or {}).get(name)
-            if b and pb and pb > 0:
-                flag["best_ratio"] = round(b / pb, 3)
-                flag["noise_shaped"] = flag["best_ratio"] <= 1.1
-            else:
-                flag["best_ratio"] = None
-            adj = (adjudications or {}).get(name)
-            if (
-                adj is not None
-                and adj.get("sf") == sf
-                and adj["median_band"][0] <= med <= adj["median_band"][1]
-                and (bests or {}).get(name) is not None
-                and (bests or {})[name] <= adj["best_max"]
-            ):
-                # inside the adjudicated measurement envelope: the flag
-                # is the KNOWN cold/warm-floor shape, recorded separately
-                # (auditable, not a regression). Outside either bound it
-                # falls through and flags normally.
-                flag["adjudication"] = adj["anchor"]
-                adjudicated[name] = flag
-                continue
-            regressions[name] = flag
-    backstop = drift > DRIFT_BACKSTOP
-    return {
-        "regressions": regressions,
-        "adjudicated": adjudicated,
-        "host_drift_factor": round(drift, 3),
-        "drift_backstop_exceeded": backstop,
-        "uniform_slowdown_raw": (
-            {n: round(r, 3) for n, r in ratios.items() if r > 1.25}
-            if backstop
-            else {}
-        ),
-    }
+# fresh-process pairs per --base comparison; the verdict needs 9 of 10
+PAIRS = 10
 
 
 def files_read(df) -> int | None:
@@ -429,46 +108,106 @@ HEADLINE = [
     "dp_tfidf_terms",        # tf/df aggregates + per-doc top-k window
 ]
 
+LAYOUT_QUERIES = {
+    # 2 of 30 days -> PartitionFilters prune 28 day directories
+    "time_2days": "_time:[2024-01-10, 2024-01-12) | stats count() as n",
+    # stream filter + time range: partition prune AND sidecar file
+    # prune compose (1 of 5 event_type streams in the kept days)
+    "stream_2days": '{event_type="click"}'
+    " _time:[2024-01-10, 2024-01-12) | stats count() as n",
+    # sidecar-only prune across every day
+    "stream_scan": '{event_type="click"} | stats count() as n',
+}
 
-def main() -> int:
-    here_early = os.path.dirname(os.path.abspath(__file__))
+
+def data_dir(sf_arg: str | None) -> str:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if "--sf" in sys.argv:
-        # --sf 0.001/0.01/0.1 -> the driver's testdata; --sf 1 -> the
-        # derived 10x bench replica (<repo>/.bench_sf1, built by
-        # tools/make_sf1.py on demand). The guard's priors are keyed by
-        # sf (load_history_priors matches rec["sf"]), so each scale
-        # point carries its own history line.
-        sf_arg = sys.argv[sys.argv.index("--sf") + 1]
+    if sf_arg is not None:
         if sf_arg in ("1", "1.0"):
-            sf_dir = os.path.join(here_early, ".bench_sf1")
+            sf_dir = os.path.join(HERE, ".bench_sf1")
             if not os.path.exists(os.path.join(sf_dir, "lineitem.parquet")):
-                import subprocess
-
                 subprocess.run(
-                    [sys.executable,
-                     os.path.join(here_early, "tools", "make_sf1.py")],
+                    [sys.executable, os.path.join(HERE, "tools", "make_sf1.py")],
                     check=True,
                 )
         else:
             sf_dir = f"/root/testdata/sf{sf_arg}"
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    return sf_dir
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    is_retry = os.environ.get("SPARK_GRAFT_BENCH_RETRY") == "1"
 
-    # Pre-run host-quietness gate (machine-visible epoch protocol — r15's
-    # driver run landed in a degraded co-tenant epoch and its numbers were
-    # uninterpretable; the probe makes the host state part of the record
-    # and buys a bounded wait for a quiet window before burning a run).
-    probe_pre_wide, probe_pre_one, probe_pre_quiet = wait_for_quiet_host()
-    print(
-        f"# host probe pre: 32way={probe_pre_wide:.2f}s "
-        f"1way={probe_pre_one:.2f}s quiet={probe_pre_quiet}",
-        file=sys.stderr,
+def result_line(
+    sf: float | None,
+    cpus: int,
+    samples: dict[str, list[float]],
+    layout_samples: dict[str, list[float]],
+    layout: dict | None,
+    module_file: str,
+    worker_module_files: list[str],
+) -> str:
+    """The plain-mode JSON line: best and median of EVERY timed query
+    (never trimmed), the layout section and the module files the driver
+    and the Python workers imported."""
+    best = {n: round(min(s), 4) for n, s in samples.items()}
+    return json.dumps(
+        {
+            "metric": "headline_queries_total_wall",
+            "value": round(sum(best.values()), 4),
+            "unit": "sec",
+            "sf": sf,
+            "cpus": cpus,
+            # action materializes EVERY output column; "best" is min over
+            # hot runs (ClickBench convention), medians alongside
+            "action": "noop_write",
+            "stat": "best_of_runs",
+            "queries": best,
+            "query_medians": {
+                n: round(statistics.median(s), 4) for n, s in samples.items()
+            },
+            "queries_layout": {
+                n: round(min(s), 4) for n, s in layout_samples.items()
+            },
+            "layout_query_medians": {
+                n: round(statistics.median(s), 4)
+                for n, s in layout_samples.items()
+            },
+            "layout": layout,
+            "module_file": module_file,
+            "worker_module_files": worker_module_files,
+        }
     )
 
-    from victorialogs_spark.driver_entry import QUERIES
+
+def timed_runs(spark, runs: int, action) -> list[float]:
+    """Wall times of `runs` calls of `action() -> DataFrame` + noop write,
+    after clearing cached frames, each with the session's partition count."""
+    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    # drop frames cached by PREVIOUS entries (several dp operators cache
+    # mid-plan intermediates): leftover blocks inflate GC and executor
+    # memory pressure for later queries — measured 4x noise on
+    # dp_dup_clusters when 20 earlier entries' caches were live
+    spark.catalog.clearCache()
+    samples = []
+    for _ in range(runs):
+        # dp entries tune shuffle partitions internally on some paths;
+        # re-pin before each run so no query inherits another's setting
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
+        # timer wraps DF construction too: iterative operators
+        # (connected components) execute jobs eagerly while building the
+        # result DF — timing only the final action would miss them
+        t0 = time.monotonic()
+        action().write.format("noop").mode("overwrite").save()
+        samples.append(time.monotonic() - t0)
+    return samples
+
+
+def run_plain(sf_dir: str, names: list[str]) -> str:
+    import victorialogs_spark
+    from victorialogs_spark.driver_entry import LOGSQL_TEXT, QUERIES
+
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"bench.py: unknown registry entries {unknown}")
+
     from victorialogs_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -476,9 +215,9 @@ def main() -> int:
 
     # warm-up: touch the main tables once (JVM + reader init), and run one
     # trivial Arrow pandas UDF so the Python worker pool + Arrow transfer
-    # path is initialized before any dp_* query is timed (same class of
-    # one-time startup as JVM/codegen warm-up, paid once per cluster, not
-    # per query)
+    # path is initialized before any dp_* query is timed. The UDF reports
+    # which victorialogs_spark the workers import (--base checks it).
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from victorialogs_spark.schema import events_as_logs, load_table
@@ -487,73 +226,58 @@ def main() -> int:
     load_table(spark, sf_dir, "lineitem").count()
     load_table(spark, sf_dir, "orders").count()
 
-    import pandas as pd
+    def _worker_module(s):
+        import victorialogs_spark
 
-    def _noop(s):
-        return s
+        return pd.Series([victorialogs_spark.__file__] * len(s))
 
     # set annotations directly: `from __future__ import annotations` above
     # would stringify inline hints, which pandas_udf can't resolve
-    _noop.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    noop = F.pandas_udf(_noop, "string")
+    _worker_module.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    worker_module = F.pandas_udf(_worker_module, "string")
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # noop WRITE, not count(): count(*) needs no columns, so Catalyst
-    # prunes the UDF projection away and no Python worker ever starts —
-    # exactly the pruning hazard this file's header documents
-    docs.select(noop(F.col("text"))).write.format("noop").mode("overwrite").save()
+    worker_module_files = sorted(
+        r[0] for r in docs.select(worker_module(F.col("text"))).distinct().collect()
+    )
 
     # hot-run convention (same as the ClickBench methodology the reference
-    # benchmarks under): run each query N times, report the best — masks
-    # one-time plan/codegen compilation and co-tenant scheduling noise.
-    # This host shows BURSTY co-tenant contention (observed 0.2s → 4s on
-    # the same query minutes apart with zero local processes running), so
-    # every query gets 3 hot runs and the noisiest (pandas-UDF dp_*) get 4.
-    times: dict[str, float] = {}
-    medians: dict[str, float] = {}
-    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    for name in HEADLINE:
+    # benchmarks under): run each query N times, report best and median;
+    # the noisiest (pandas-UDF dp_*) get 4 runs
+    samples: dict[str, list[float]] = {}
+    for name in names:
         fn = QUERIES[name]
         runs = 4 if name.startswith("dp_") else 3
-        samples: list[float] = []
-        n = 0
-        # drop frames cached by PREVIOUS entries (several dp operators
-        # cache mid-plan intermediates): leftover blocks inflate GC and
-        # executor memory pressure for later queries — measured 4x noise
-        # on dp_dup_clusters when 20 earlier entries' caches were live
-        spark.catalog.clearCache()
-        for _ in range(runs):
-            # dp entries tune shuffle partitions internally on some paths;
-            # re-pin before each run so no query inherits another's setting
-            spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
-            # timer wraps DF construction too: iterative operators
-            # (connected components) execute jobs eagerly while building
-            # the result DF — timing only the final action would miss
-            # them (plan construction for lazy queries is sub-ms noise)
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.monotonic() - t0)
-        n = df.count()
-        samples.sort()
-        times[name] = round(samples[0], 4)
-        mid = len(samples) // 2
-        medians[name] = round(
-            samples[mid]
-            if len(samples) % 2
-            else (samples[mid - 1] + samples[mid]) / 2,
-            4,
-        )
-        print(f"# {name}: {times[name]:.3f}s ({n} rows)", file=sys.stderr)
+        samples[name] = timed_runs(spark, runs, lambda: fn(spark, sf_dir))
+        print(f"# {name}: {min(samples[name]):.3f}s", file=sys.stderr)
 
-    # ---- production-layout bench: every headline scan above reads ONE
-    # raw parquet file; at 100 TB the layout IS the query plan, so this
-    # section measures the same query classes over the day-partitioned,
-    # compact_day-clustered, sidecar-indexed copy — proving (in the
-    # measured plans) that _time ranges prune _day partitions
-    # (PartitionFilters) and stream filters prune files via the sidecar.
+    # the layout section runs whenever a selected query has a layout twin
+    layout = None
+    layout_samples: dict[str, list[float]] = {}
+    twins = [n for n in names if n in LOGSQL_TEXT]
+    if twins:
+        layout, layout_samples = run_layout(spark, sf_dir, twins)
+
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else None
+    cpus = int(spark.sparkContext.defaultParallelism)
+    return result_line(
+        sf, cpus, samples, layout_samples, layout,
+        victorialogs_spark.__file__, worker_module_files,
+    )
+
+
+def run_layout(spark, sf_dir: str, twins: list[str]):
+    """Production-layout section: every headline scan reads ONE raw
+    parquet file; at 100 TB the layout IS the query plan, so this builds
+    the day-partitioned, compact_day-clustered, sidecar-indexed copy,
+    records per pruning query files read vs listed and PartitionFilters,
+    and times the `twins` (events-based headline entries, same LogsQL
+    text) over it. Returns (layout section, twin samples)."""
     from victorialogs_spark.api import run_query
+    from victorialogs_spark.driver_entry import LOGSQL_TEXT
+    from victorialogs_spark.schema import events_as_logs
     from victorialogs_spark.streaming.ingest import build_log_layout
 
     layout_dir = os.environ.get(
@@ -571,43 +295,25 @@ def main() -> int:
         # can prune at file granularity (5 event_type streams here)
         target_files=5,
     )
-    layout_build_sec = round(time.monotonic() - t0, 4)
+    build_sec = round(time.monotonic() - t0, 4)
     table_files = len(spark.read.parquet(layout_dir).inputFiles())
     raw_logs = events_as_logs(spark, sf_dir)
 
-    LAYOUT_QUERIES = {
-        # 2 of 30 days -> PartitionFilters prune 28 day directories
-        "time_2days": "_time:[2024-01-10, 2024-01-12) | stats count() as n",
-        # stream filter + time range: partition prune AND sidecar file
-        # prune compose (1 of 5 event_type streams in the kept days)
-        "stream_2days": '{event_type="click"}'
-        " _time:[2024-01-10, 2024-01-12) | stats count() as n",
-        # sidecar-only prune across every day
-        "stream_scan": '{event_type="click"} | stats count() as n',
-    }
-    layout: dict[str, dict] = {}
+    queries: dict[str, dict] = {}
     for name, q in LAYOUT_QUERIES.items():
         entry: dict = {}
-        for kind, runner in (
-            ("layout", lambda: run_query(spark, layout_dir, q)),
-            ("raw", lambda: run_query(spark, raw_logs, q)),
-        ):
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.monotonic()
-                df = runner()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.monotonic() - t0)
-            entry[f"{kind}_sec"] = round(best, 4)
-            if kind == "layout":
-                # files surviving the SIDECAR prune (the reader's list)...
-                entry["files_listed"] = len(df.inputFiles())
-                # ...and files actually READ (after PartitionFilters too)
-                entry["files_read"] = files_read(df)
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-                entry["partition_filters"] = bool(pf and pf.group(1).strip())
-        layout[name] = entry
+        for kind, src in (("layout", layout_dir), ("raw", raw_logs)):
+            runs = timed_runs(spark, 3, lambda: run_query(spark, src, q))
+            entry[f"{kind}_sec"] = round(min(runs), 4)
+        df = run_query(spark, layout_dir, q)
+        # files surviving the SIDECAR prune (the reader's list)...
+        entry["files_listed"] = len(df.inputFiles())
+        # ...and files actually READ (after PartitionFilters too)
+        entry["files_read"] = files_read(df)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        entry["partition_filters"] = bool(pf and pf.group(1).strip())
+        queries[name] = entry
         print(
             f"# layout {name}: {entry['layout_sec']:.3f}s, read "
             f"{entry['files_read']}/{table_files} files "
@@ -617,365 +323,187 @@ def main() -> int:
             file=sys.stderr,
         )
 
-    # ---- layout HEADLINE column: the same headline queries (the
-    # events-based ones — LogsQL text re-run verbatim) over the
-    # partitioned+sidecar layout, measured with the same hot-run
-    # protocol and guarded by the same regression check as the raw
-    # scans. At 100 TB the layout is the ONLY read path; a pruning
-    # regression must trip the same alarm as a raw-scan regression.
-    from victorialogs_spark.driver_entry import LOGSQL_TEXT
-
-    layout_times: dict[str, float] = {}
-    layout_medians: dict[str, float] = {}
-    for name in HEADLINE:
-        q = LOGSQL_TEXT.get(name)
-        if q is None:
-            continue  # non-events entry (tpch_*/dp_*): no log layout
-        samples = []
-        spark.catalog.clearCache()
-        for _ in range(3):
-            spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
-            t0 = time.monotonic()
-            df = run_query(spark, layout_dir, q)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.monotonic() - t0)
-        samples.sort()
-        layout_times[name] = round(samples[0], 4)
-        mid = len(samples) // 2
-        layout_medians[name] = round(
-            samples[mid]
-            if len(samples) % 2
-            else (samples[mid - 1] + samples[mid]) / 2,
-            4,
+    samples: dict[str, list[float]] = {}
+    for name in twins:
+        q = LOGSQL_TEXT[name]
+        samples[name] = timed_runs(
+            spark, 3, lambda: run_query(spark, layout_dir, q)
         )
         print(
-            f"# layout-headline {name}: {layout_times[name]:.3f}s",
+            f"# layout-headline {name}: {min(samples[name]):.3f}s",
             file=sys.stderr,
         )
+    section = {"build_sec": build_sec, "table_files": table_files, "queries": queries}
+    return section, samples
 
-    total = round(sum(times.values()), 4)
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
 
-    # trend guard: compare this run's medians against the newest line of
-    # the COMMITTED history (BENCH_HISTORY.jsonl) and flag >25% median
-    # regressions loudly — medians, not best-of, so a single co-tenant
-    # burst can't trip it (SCALE.md documents the host's bursty
-    # contention). History first, driver artifact only as fallback: the
-    # artifact's tail capture truncated r8's line, which blinded r9's
-    # guard entirely (VERDICT r9 "What's wrong" #2).
-    import glob
+# ------------------------------------------------------------ --base mode
 
-    # post-run probe: a pre-quiet/post-busy pair explains a turbulent
-    # tail; both walls land in the artifact and the history line
-    probe_post_wide, probe_post_one = host_probe()
-    probe_rec = {
-        "pre": [probe_pre_wide, probe_pre_one],
-        "post": [probe_post_wide, probe_post_one],
+
+def paired_verdict(head: list[float], base: list[float]) -> dict:
+    """Per-query summary of paired samples (head[i] and base[i] come from
+    pair i). "regressed": HEAD lost at least 9 in 10 pairs AND its median
+    is worse than base's by more than base's interquartile range;
+    "improved" mirrors it."""
+    n = len(head)
+    wins = sum(h < b for h, b in zip(head, base))
+    losses = sum(h > b for h, b in zip(head, base))
+    hq = statistics.quantiles(head, n=4, method="inclusive")
+    bq = statistics.quantiles(base, n=4, method="inclusive")
+    iqr = bq[2] - bq[0]
+    verdict = "same"
+    if losses * 10 >= 9 * n and hq[1] - bq[1] > iqr:
+        verdict = "regressed"
+    elif wins * 10 >= 9 * n and bq[1] - hq[1] > iqr:
+        verdict = "improved"
+    return {
+        "head_median": round(hq[1], 4),
+        "head_q1": round(hq[0], 4),
+        "head_q3": round(hq[2], 4),
+        "base_median": round(bq[1], 4),
+        "base_q1": round(bq[0], 4),
+        "base_q3": round(bq[2], 4),
+        "ratio": round(hq[1] / bq[1], 3) if bq[1] > 0 else None,
+        "head_wins": wins,
+        "pairs": n,
+        "verdict": verdict,
     }
-    # A burst that begins MID-RUN inflates only the tail queries: fewer
-    # than half the medians move, so the session drift stays under the
-    # backstop, and the contaminated run silently replaces the history
-    # baseline (observed r16: pre-probe quiet, post-probe 32way 2.96 s,
-    # f_word median 17x with drift only 1.246). A busy post-probe is the
-    # machine-visible signature of that shape.
-    post_busy = (
-        probe_post_wide >= PROBE_WIDE_QUIET
-        or probe_post_one >= PROBE_ONE_QUIET
-    )
-    print(
-        f"# host probe post: 32way={probe_post_wide:.2f}s "
-        f"1way={probe_post_one:.2f}s",
-        file=sys.stderr,
-    )
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    prior_rec, baseline_label = load_history_priors(here, sf, cpus)
-    prior_medians = prior_rec.get("query_medians") or {}
-    prior_layout_medians = prior_rec.get("layout_query_medians") or {}
-    prior_bests = prior_rec.get("query_bests") or {}
-    prior_layout_bests = prior_rec.get("layout_query_bests") or {}
-    # driver BENCH artifacts are 32-core runs; never a baseline for a
-    # scaling run at another core count
-    if not prior_medians and cpus == 32:
-        benches = sorted(
-            glob.glob(os.path.join(here, "BENCH_r*.json")),
-            key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
-        )
-        if benches:
-            try:
-                with open(benches[-1]) as fh:
-                    prior = json.load(fh)
-                # the driver wraps the bench's JSON line under "parsed"
-                if "query_medians" not in prior and isinstance(
-                    prior.get("parsed"), dict
-                ):
-                    prior = prior["parsed"]
-                if prior.get("sf") == sf:
-                    prior_medians = prior.get("query_medians") or {}
-                    prior_layout_medians = (
-                        prior.get("layout_query_medians") or {}
+
+def arm_python(root: str, environ: dict | None = None) -> tuple[list[str], dict]:
+    """(interpreter argv, env) for a fresh process whose driver AND Python
+    workers import `root`'s victorialogs_spark. `-P` keeps the script's
+    own directory off sys.path, so PYTHONPATH's first entry (`root`)
+    comes first; workers run `-m pyspark.daemon` from the driver's cwd,
+    which the caller sets to `root`. The core count is pinned so both
+    arms' sessions get the same local[N] whatever their defaults."""
+    env = dict(os.environ if environ is None else environ)
+    rest = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    env["PYTHONPATH"] = os.pathsep.join([root] + rest)
+    env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    return [sys.executable, "-P"], env
+
+
+def run_arm(root: str, args: list[str]) -> dict:
+    """One fresh plain-mode process of this file against `root`; returns
+    its JSON line after checking where victorialogs_spark came from."""
+    argv, env = arm_python(root)
+    proc = subprocess.run(
+        argv + [os.path.abspath(__file__)] + args,
+        env=env, cwd=root, stdout=subprocess.PIPE, text=True,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if proc.returncode or not lines:
+        raise SystemExit(f"bench.py: arm {root} failed (exit {proc.returncode})")
+    rec = json.loads(lines[-1])
+    prefix = os.path.join(os.path.realpath(root), "")
+    for f in [rec["module_file"]] + rec["worker_module_files"]:
+        if not os.path.realpath(f).startswith(prefix):
+            raise SystemExit(
+                f"bench.py: arm {root} imported victorialogs_spark from {f}"
+            )
+    return rec
+
+
+@contextlib.contextmanager
+def base_checkout(ref: str):
+    """Yield (root, sha) of `ref` checked out detached in a temporary git
+    worktree, removed again on exit."""
+    sha = subprocess.run(
+        ["git", "-C", HERE, "rev-parse", "--verify", f"{ref}^{{commit}}"],
+        check=True, stdout=subprocess.PIPE, text=True,
+    ).stdout.strip()
+    tmp = tempfile.mkdtemp(prefix="bench-base-")
+    root = os.path.join(tmp, "base")
+    subprocess.run(
+        ["git", "-C", HERE, "worktree", "add", "--detach", root, sha],
+        check=True, stdout=subprocess.DEVNULL,
+    )
+    try:
+        yield root, sha
+    finally:
+        subprocess.run(["git", "-C", HERE, "worktree", "remove", "--force", root])
+        shutil.rmtree(tmp, ignore_errors=True)
+        subprocess.run(["git", "-C", HERE, "worktree", "prune"])
+
+
+def run_paired(ref: str, args: list[str]) -> tuple[str, bool]:
+    """PAIRS alternating-order pairs of fresh head/base processes; returns
+    (JSON line, any query regressed)."""
+    with base_checkout(ref) as (base_root, sha):
+        roots = {"head": HERE, "base": base_root}
+        samples: dict[str, dict[str, list[float]]] = {"head": {}, "base": {}}
+        arms: dict[str, dict] = {}
+        for i in range(PAIRS):
+            for arm in ("head", "base") if i % 2 == 0 else ("base", "head"):
+                rec = run_arm(roots[arm], args)
+                if arm not in arms:
+                    arms[arm] = {
+                        "root": roots[arm],
+                        "module_file": rec["module_file"],
+                        "worker_module_files": rec["worker_module_files"],
+                    }
+                    print(
+                        f"# {arm} victorialogs_spark: {rec['module_file']}",
+                        file=sys.stderr,
                     )
-                    # driver artifacts record best-of under "queries"
-                    prior_bests = prior.get("queries") or {}
-                    baseline_label = os.path.basename(benches[-1])
-            except Exception:
-                pass
-    regressions: dict[str, dict] = {}
-    flags = compute_regression_flags(
-        medians, prior_medians, times, prior_bests,
-        sf=sf, adjudications=ADJUDICATIONS,
-    )
-
-    # persist this run's medians for the NEXT round's guard (committed
-    # with the round snapshot); round = newest driver artifact + 1
-    bench_arts = [
-        int(re.search(r"BENCH_r(\d+)", p).group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-    ]
-    this_round = (max(bench_arts) + 1) if bench_arts else None
-    # A backstopped run's medians must NEVER become (or replace) the
-    # guard's baseline: r15's driver run (drift 1.941) overwrote the
-    # committed quiet-epoch r15 line in the working tree, leaving r16 a
-    # contaminated prior. Only epoch-clean runs write history. A run
-    # whose POST-probe is busy while regressions flagged is the mid-run
-    # -burst shape (see post_busy above) — same treatment.
-    epoch_suspect = flags["drift_backstop_exceeded"] or (
-        post_busy and bool(flags["regressions"])
-    )
-    if not epoch_suspect:
-        try:
-            append_history(
-                here, this_round, sf, medians, layout_medians, times,
-                layout_times, cpus=cpus,
-                drift=flags["host_drift_factor"], probe=probe_rec,
-            )
-        except OSError as exc:
-            print(f"# history append failed: {exc}", file=sys.stderr)
-    else:
-        print(
-            "# history NOT updated: epoch suspect (drift backstop or busy "
-            "post-probe with flags) — this run's medians would poison the "
-            "next round's baseline",
-            file=sys.stderr,
-        )
-    # same guard over the layout read path (silent the first round a
-    # layout baseline doesn't exist yet)
-    layout_flags = compute_regression_flags(
-        layout_medians, prior_layout_medians, layout_times, prior_layout_bests
-    )
-    for name, info in layout_flags["regressions"].items():
-        print(
-            f"# LAYOUT REGRESSION {name}: median {info['prior_median']:.3f}s"
-            f" -> {info['median']:.3f}s ({info['ratio']:.2f}x raw)",
-            file=sys.stderr,
-        )
-    regressions = flags["regressions"]
-    drift = flags["host_drift_factor"]
-    for name, info in flags["adjudicated"].items():
-        print(
-            f"# ADJUDICATED {name}: median {info['prior_median']:.3f}s -> "
-            f"{info['median']:.3f}s ({info['ratio']:.2f}x) inside the "
-            f"adjudicated envelope — {info['adjudication']}",
-            file=sys.stderr,
-        )
-    for name, info in regressions.items():
-        shape = ""
-        if info.get("best_ratio") is not None:
-            shape = (
-                f", best-of {info['best_ratio']:.2f}x"
-                + (" [noise-shaped]" if info.get("noise_shaped") else "")
-            )
-        print(
-            f"# REGRESSION {name}: median {info['prior_median']:.3f}s -> "
-            f"{info['median']:.3f}s ({info['ratio']:.2f}x raw, "
-            f"{info['drift_normalized_ratio']:.2f}x drift-normalized"
-            f"{shape}) vs {baseline_label or '?'}",
-            file=sys.stderr,
-        )
-    if drift is None:
-        print(
-            "# NO PRIOR BASELINE: regression guard did not run "
-            "(host_drift_factor=null)",
-            file=sys.stderr,
-        )
-    if flags["drift_backstop_exceeded"]:
-        print(
-            f"# DRIFT BACKSTOP: host_drift_factor {drift:.2f} exceeds "
-            f"{DRIFT_BACKSTOP} — a UNIFORM slowdown this large may be a "
-            f"genuine session-wide regression the normalization absorbed; "
-            f"raw >1.25x queries: "
-            f"{sorted(flags['uniform_slowdown_raw'])}",
-            file=sys.stderr,
-        )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                # methodology self-description so a future action change
-                # can't silently break round-over-round comparability
-                # (round 4 switched .count() -> noop write; the r3->r5
-                # totals were not comparable and nothing in the JSON said
-                # so): action materializes EVERY output column; "best"
-                # is min over hot runs (ClickBench convention), medians
-                # recorded alongside for noise visibility
-                "action": "noop_write",
-                "runs_per_query": {"dp_*": 4, "default": 3},
-                "stat": "best_of_runs",
-                "query_medians": medians,
-                # queries whose median regressed >25% vs the latest
-                # recorded round artifact (empty = no regressions);
-                # baseline file named so the comparison is auditable
-                "regressions": regressions,
-                # session-wide median of per-query ratios vs the prior
-                # round — the co-tenant contention factor the regression
-                # flags were normalized by (1.0 = no drift detected,
-                # null = NO PRIOR EXISTED, the guard did not run)
-                "host_drift_factor": drift,
-                # backstop: True when the drift factor itself exceeds
-                # DRIFT_BACKSTOP — a uniform slowdown that large needs a
-                # human look even if it's the host; the raw >1.25x
-                # queries are listed so the check is auditable
-                "drift_backstop_exceeded": flags["drift_backstop_exceeded"],
-                # drift backstop OR busy post-probe + flags (mid-run
-                # burst): history not written, one fresh-process retry
-                "epoch_suspect": epoch_suspect,
-                "uniform_slowdown_raw": flags["uniform_slowdown_raw"],
-                # flags inside a SCALE.md-adjudicated measurement
-                # envelope — visible for audit, not regressions
-                "adjudicated_flags": flags["adjudicated"],
-                # the SAME headline queries (events-based subset, same
-                # LogsQL text, same hot-run protocol) over the
-                # partitioned+sidecar layout — the actual 100 TB read
-                # path — with the regression guard applied independently
-                "queries_layout": layout_times,
-                "layout_query_medians": layout_medians,
-                "layout_regressions": layout_flags["regressions"],
-                "layout_host_drift_factor": layout_flags["host_drift_factor"],
-                "layout_drift_backstop_exceeded": layout_flags[
-                    "drift_backstop_exceeded"
-                ],
-                "regression_baseline": baseline_label,
-                "cpus": cpus,
-                # pure-shell host-quietness walls (32-way / 1-way sha256):
-                # the epoch protocol — a busy probe explains a high drift
-                # factor without blaming the code
-                "host_probe_sec": probe_rec,
-                # the same query classes over the production layout
-                # (day-partitioned + compacted + sidecar-indexed) vs the
-                # raw single-file table; files_scanned / partition_filters
-                # prove the pruning in the measured plans. Not part of
-                # "value" (the headline total stays comparable across
-                # rounds).
-                "layout": {
-                    "build_sec": layout_build_sec,
-                    "table_files": table_files,
-                    "queries": layout,
-                },
-                "sf": sf,
-            }
-        )
-    )
-    # ---- FINAL compact machine-readable line. The round driver captures
-    # only the LAST ~2000 chars of combined output and parses the last
-    # JSON line it finds; round 8's verbose line above outgrew that
-    # window and the artifact recorded `parsed: null` with a tail that
-    # began mid-dict. This line carries everything the next round's
-    # regression guard and the judge need (totals, per-query best-of +
-    # medians, guard flags) and trims optional sections if it would
-    # overflow the capture window. It must be printed LAST.
-    sys.stderr.flush()
-    compact = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "stat": "best_of_runs",
-        "action": "noop_write",
-        "queries": {n: round(v, 3) for n, v in times.items()},
-        "query_medians": {n: round(v, 3) for n, v in medians.items()},
-        "layout_query_medians": {
-            n: round(v, 3) for n, v in layout_medians.items()
-        },
-        # names only — full detail lives in the verbose line above
-        "regressions": sorted(regressions),
-        # flagged queries only: the triage the judge adjudicates from
-        # (best_ratio moved too => real; medians-only => noise-shaped)
-        "regressions_detail": {
-            n: {
-                "ratio": d.get("ratio"),
-                "best_ratio": d.get("best_ratio"),
-                "noise_shaped": d.get("noise_shaped"),
-            }
-            for n, d in sorted(flags["regressions"].items())
-        },
-        "layout_regressions": sorted(layout_flags["regressions"]),
-        "adjudicated_flags": sorted(flags["adjudicated"]),
-        "host_drift_factor": drift,
-        "drift_backstop_exceeded": flags["drift_backstop_exceeded"],
-        "epoch_suspect": epoch_suspect,
-        "baseline": baseline_label,
-        "cpus": cpus,
-        "host_probe_sec": probe_rec,
-        "retry": is_retry,
+                meds = dict(rec["query_medians"])
+                meds.update(
+                    (f"layout:{n}", v)
+                    for n, v in rec["layout_query_medians"].items()
+                )
+                for n, v in meds.items():
+                    samples[arm].setdefault(n, []).append(v)
+            print(f"# pair {i + 1}/{PAIRS} done", file=sys.stderr)
+    queries = {
+        n: paired_verdict(samples["head"][n], samples["base"][n])
+        for n in samples["head"]
     }
-    # stay well under the driver's 2000-char tail capture; final tiers
-    # guarantee it ALWAYS fits (the full medians/regression detail is
-    # safe regardless — it lives in BENCH_HISTORY.jsonl + the verbose
-    # line): drop optional sections, then collapse unbounded lists to
-    # counts, then drop per-query numbers entirely
-    for drop in (
-        "layout_query_medians", "queries", "query_medians",
-        "regressions_detail",
-    ):
-        if len(json.dumps(compact)) > 1900:
-            compact.pop(drop, None)
-    if len(json.dumps(compact)) > 1900:
-        compact["regressions"] = len(regressions)
-        compact["layout_regressions"] = len(layout_flags["regressions"])
-
-    # One automatic fresh-process retry when this run tripped the drift
-    # backstop (the r15 driver run did, and the round's timing comparison
-    # was uninterpretable): stop this session's JVM, wait (bounded) for a
-    # quiet probe, and re-run bench.py as a CHILD PROCESS with the same
-    # argv — a genuine fresh-process run under the same protocol, so its
-    # numbers stay comparable to every prior line. The child's final
-    # compact JSON line prints after ours and becomes the line of record
-    # (the driver parses the LAST JSON line); ours is kept, marked
-    # superseded, so the degraded attempt stays auditable. The env flag
-    # caps recursion at one retry.
-    if epoch_suspect and not is_retry:
-        compact["superseded_by_retry"] = True
-        print(json.dumps(compact))
-        sys.stdout.flush()
+    for n, v in queries.items():
         print(
-            "# epoch suspect (drift backstop or mid-run burst) — stopping "
-            "this JVM and retrying once as a fresh process after a "
-            "quiet-probe wait",
+            f"# {n}: head {v['head_median']:.3f}s "
+            f"[{v['head_q1']:.3f}, {v['head_q3']:.3f}] base "
+            f"{v['base_median']:.3f}s [{v['base_q1']:.3f}, {v['base_q3']:.3f}]"
+            f" ratio {v['ratio']} head won {v['head_wins']}/{v['pairs']}"
+            f" {v['verdict']}",
             file=sys.stderr,
         )
-        spark.stop()
-        import subprocess
+    regressed = sorted(n for n, v in queries.items() if v["verdict"] == "regressed")
+    line = json.dumps(
+        {
+            "metric": "paired_median_ratio",
+            "base": ref,
+            "base_sha": sha,
+            "pairs": PAIRS,
+            "arms": arms,
+            "queries": queries,
+            "regressed": regressed,
+            "improved": sorted(
+                n for n, v in queries.items() if v["verdict"] == "improved"
+            ),
+        }
+    )
+    return line, bool(regressed)
 
-        wide, one, quiet = wait_for_quiet_host(max_wait_sec=300.0)
-        print(
-            f"# retry probe: 32way={wide:.2f}s 1way={one:.2f}s "
-            f"quiet={quiet} — launching retry run",
-            file=sys.stderr,
-        )
-        env = dict(os.environ)
-        env["SPARK_GRAFT_BENCH_RETRY"] = "1"
-        child = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)] + sys.argv[1:],
-            env=env,
-        )
-        return child.returncode
 
-    print(json.dumps(compact))
-    sys.stdout.flush()
+def main() -> int:
+    ap = argparse.ArgumentParser(
+        description="Time headline registry queries, plain or paired "
+        "against a git ref (see the module docstring)."
+    )
+    ap.add_argument("--sf", help="scale factor: 0.001/0.01/0.1 or 1")
+    ap.add_argument("--base", metavar="REF", help="compare against this git ref")
+    ap.add_argument("queries", nargs="*", metavar="query",
+                    help="registry entries to time (default: HEADLINE)")
+    args = ap.parse_args()
+    if args.base:
+        child = (["--sf", args.sf] if args.sf else []) + args.queries
+        line, regressed = run_paired(args.base, child)
+        print(line)
+        return 1 if regressed else 0
+    line = run_plain(data_dir(args.sf), args.queries or HEADLINE)
+    sys.stderr.flush()
+    print(line)
     return 0
 
 

@@ -1,264 +1,104 @@
-"""Unit tests for bench.py's regression guard — pure-Python, no Spark.
+"""Unit tests for bench.py's paired verdict and output line — pure
+Python, no Spark.
 
-The guard normalizes per-query ratios by the session-median ratio
-(host-drift absorption), which makes it blind to a regression hitting
->= half the queries; the DRIFT_BACKSTOP flag exists to catch exactly
-that case.
+`bench.py --base REF` runs fresh head/base processes in alternating
+pairs; a query regresses only when HEAD loses at least 9 of 10 pairs AND
+its median is worse than base's by more than base's interquartile range.
 """
 
+import json
 import os
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import DRIFT_BACKSTOP, compute_regression_flags  # noqa: E402
+from bench import PAIRS, arm_python, paired_verdict, result_line  # noqa: E402
 
-PRIOR = {f"q{i}": 1.0 for i in range(10)}
+# ten per-pair base medians with a realistic spread (IQR ~0.05 s)
+BASE = [1.00, 1.03, 0.98, 1.05, 1.01, 0.99, 1.07, 1.02, 0.97, 1.04]
+NAMES = [f"q{i}" for i in range(30)]
 
 
 def test_no_change_no_flags():
-    flags = compute_regression_flags(dict(PRIOR), PRIOR)
-    assert flags["regressions"] == {}
-    assert flags["host_drift_factor"] == 1.0
-    assert not flags["drift_backstop_exceeded"]
-    assert flags["uniform_slowdown_raw"] == {}
+    v = paired_verdict(list(BASE), list(BASE))
+    assert v["verdict"] == "same"
+    assert v["head_wins"] == 0
+    assert v["ratio"] == 1.0
+    assert v["pairs"] == PAIRS
 
 
 def test_localized_regression_flagged():
-    medians = dict(PRIOR)
-    medians["q3"] = 1.6  # one query 60% slower, the rest flat
-    flags = compute_regression_flags(medians, PRIOR)
-    assert list(flags["regressions"]) == ["q3"]
-    assert flags["host_drift_factor"] == 1.0
-    assert not flags["drift_backstop_exceeded"]
+    # one query 20% slower in every pair, the rest unchanged
+    verdicts = {
+        n: paired_verdict([b * (1.2 if n == "q3" else 1.0) for b in BASE], BASE)
+        for n in NAMES
+    }
+    assert [n for n, v in verdicts.items() if v["verdict"] == "regressed"] == ["q3"]
+    assert verdicts["q3"]["head_wins"] == 0
+    assert verdicts["q3"]["ratio"] == 1.2
 
 
-def test_host_drift_absorbs_moderate_uniform_shift():
-    # everything 15% slower — classic co-tenant contention, below the
-    # backstop: absorbed, recorded in the factor, no false flags
-    medians = {n: v * 1.15 for n, v in PRIOR.items()}
-    flags = compute_regression_flags(medians, PRIOR)
-    assert flags["regressions"] == {}
-    assert 1.1 < flags["host_drift_factor"] < 1.2
-    assert not flags["drift_backstop_exceeded"]
+def test_uniform_slowdown_flags_every_query():
+    # EVERY query 1.5x slower (e.g. a session-conf regression): a paired
+    # run has no drift factor to absorb it, so each one flags
+    verdicts = [paired_verdict([b * 1.5 for b in BASE], BASE) for _ in NAMES]
+    assert all(v["verdict"] == "regressed" for v in verdicts)
 
 
-def test_uniform_genuine_regression_trips_backstop():
-    # EVERY query 50% slower (e.g. a session-conf regression): the
-    # normalization zeroes the per-query flags — the backstop must fire
-    # and list the raw-slow queries so the run cannot read as clean
-    medians = {n: v * 1.5 for n, v in PRIOR.items()}
-    flags = compute_regression_flags(medians, PRIOR)
-    assert flags["regressions"] == {}  # the blindness being backstopped
-    assert flags["host_drift_factor"] > DRIFT_BACKSTOP
-    assert flags["drift_backstop_exceeded"]
-    assert set(flags["uniform_slowdown_raw"]) == set(PRIOR)
+def test_improvement_is_the_mirror_rule():
+    v = paired_verdict([b * 0.8 for b in BASE], BASE)
+    assert v["verdict"] == "improved"
+    assert v["head_wins"] == 10
 
 
-def test_missing_prior_reports_null_drift_not_fabricated_one():
-    # r9's artifact recorded host_drift_factor 1.0 with an EMPTY prior,
-    # which read as "checked, clean" when nothing was checked — a missing
-    # prior must say null so the blind spot is visible in the artifact
-    flags = compute_regression_flags(dict(PRIOR), {})
-    assert flags["regressions"] == {}
-    assert flags["host_drift_factor"] is None
-    assert not flags["drift_backstop_exceeded"]
+def test_eight_of_ten_losses_not_flagged():
+    head = [b * 1.5 for b in BASE[:8]] + [b * 0.9 for b in BASE[8:]]
+    v = paired_verdict(head, BASE)
+    assert v["head_wins"] == 2
+    assert v["verdict"] == "same"
 
 
-def test_history_roundtrip(tmp_path):
-    from bench import append_history, load_history_priors
-
-    here = str(tmp_path)
-    # missing file -> empty record, no label
-    rec, label = load_history_priors(here, 0.1)
-    assert (rec, label) == ({}, None)
-    append_history(here, 9, 0.1, {"q1": 1.0}, {"q1": 2.0})
-    append_history(here, 10, 0.1, {"q1": 1.1}, {"q1": 2.1}, {"q1": 0.9})
-    rec, label = load_history_priors(here, 0.1)
-    assert rec["query_medians"] == {"q1": 1.1}
-    assert rec["layout_query_medians"] == {"q1": 2.1}
-    assert rec["query_bests"] == {"q1": 0.9}
-    assert label == "BENCH_HISTORY.jsonl:r10"
-    # sf mismatch (local sf0.01 run) must not see the sf0.1 baseline
-    assert load_history_priors(here, 0.01) == ({}, None)
-    # same-round re-run replaces, never stacks duplicates
-    append_history(here, 10, 0.1, {"q1": 1.2}, {})
-    rec, _ = load_history_priors(here, 0.1)
-    assert rec["query_medians"] == {"q1": 1.2}
-    hist = (tmp_path / "BENCH_HISTORY.jsonl").read_text().strip().split("\n")
-    assert len(hist) == 2
+def test_ten_losses_inside_iqr_not_flagged():
+    # HEAD loses every pair, but by less than base's own spread
+    v = paired_verdict([b + 0.005 for b in BASE], BASE)
+    assert v["head_wins"] == 0
+    assert v["head_median"] - v["base_median"] < v["base_q3"] - v["base_q1"]
+    assert v["verdict"] == "same"
 
 
-def test_best_ratio_pre_triages_noise_shaped_flag():
-    # median regressed 1.6x but best-of is flat: the co-tenant-burst
-    # signature r8-r10 adjudicated by manual A/B three times — the flag
-    # stays (never hidden) but arrives pre-triaged as noise_shaped
-    medians = dict(PRIOR)
-    medians["q3"] = 1.6
-    bests = {n: 0.8 for n in PRIOR}
-    prior_bests = {n: 0.8 for n in PRIOR}
-    flags = compute_regression_flags(medians, PRIOR, bests, prior_bests)
-    assert list(flags["regressions"]) == ["q3"]
-    f = flags["regressions"]["q3"]
-    assert f["best_ratio"] == 1.0
-    assert f["noise_shaped"] is True
+def test_plain_line_keeps_every_query():
+    samples = {n: [0.5 + i * 0.01, 0.4 + i * 0.01, 0.6] for i, n in enumerate(NAMES)}
+    layout = {n: [0.3, 0.2, 0.4] for n in NAMES[:9]}
+    section = {"build_sec": 3.0, "table_files": 150, "queries": {}}
+    rec = json.loads(
+        result_line(0.1, 4, samples, layout, section, "/x/vl/__init__.py", [])
+    )
+    assert set(rec["queries"]) == set(NAMES)
+    assert set(rec["query_medians"]) == set(NAMES)
+    assert rec["queries"]["q2"] == 0.42
+    assert rec["query_medians"]["q2"] == 0.52
+    assert set(rec["queries_layout"]) == set(rec["layout_query_medians"]) == set(
+        NAMES[:9]
+    )
+    assert rec["layout"] == section
+    assert rec["value"] == round(sum(rec["queries"].values()), 4)
 
 
-def test_best_ratio_confirms_genuine_regression():
-    # median AND best-of both regressed: not noise-shaped
-    medians = dict(PRIOR)
-    medians["q3"] = 1.6
-    bests = {n: 0.8 for n in PRIOR}
-    bests["q3"] = 1.3
-    prior_bests = {n: 0.8 for n in PRIOR}
-    flags = compute_regression_flags(medians, PRIOR, bests, prior_bests)
-    f = flags["regressions"]["q3"]
-    assert f["best_ratio"] == round(1.3 / 0.8, 3)
-    assert f["noise_shaped"] is False
-
-
-def test_best_ratio_null_when_prior_bests_missing():
-    # pre-r11 history lines carry no query_bests: the flag must say
-    # best_ratio null (not adjudicated), never a fabricated verdict
-    medians = dict(PRIOR)
-    medians["q3"] = 1.6
-    flags = compute_regression_flags(medians, PRIOR, {"q3": 1.5}, {})
-    f = flags["regressions"]["q3"]
-    assert f["best_ratio"] is None
-    assert "noise_shaped" not in f
-
-
-def test_committed_history_carries_r9_seed():
-    # the committed r9 seed must EXIST with sane (r8-level) priors for the
-    # three r9-contaminated queries.  bench.py appends each round's medians
-    # to the same committed file, so we locate the r9 record by its `round`
-    # field rather than asserting it is the newest line (asserting newest
-    # would self-break at the very next round-snapshot commit).
-    import json
-
+def test_arm_env_puts_worktree_root_first(tmp_path):
+    # a fake checkout: the arm process must import ITS victorialogs_spark,
+    # even with this repo's copy on the inherited PYTHONPATH
+    root = tmp_path / "base"
+    (root / "victorialogs_spark").mkdir(parents=True)
+    (root / "victorialogs_spark" / "__init__.py").write_text("")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r9 = None
-    with open(os.path.join(here, "BENCH_HISTORY.jsonl")) as fh:
-        for line in fh:
-            rec = json.loads(line)
-            if rec.get("round") == 9 and rec.get("sf") == 0.1:
-                r9 = rec
-    assert r9 is not None
-    med = r9["query_medians"]
-    assert med["f_word"] < 1.0          # r9 artifact said 3.354 (contaminated)
-    assert med["f_time_range"] < 1.0    # r9 artifact said 1.416
-    assert med["s_stats_by"] < 1.0      # r9 artifact said 4.352
-    assert r9.get("layout_query_medians")  # layout baseline present too
-
-
-def test_committed_history_newest_line_is_usable_prior():
-    # whatever round is newest, load_history_priors must return non-empty
-    # medians with a well-formed label — the guard must never go blind on
-    # the committed tree
-    import re
-
-    from bench import load_history_priors
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rec, label = load_history_priors(here, 0.1)
-    assert rec.get("query_medians"), "committed history yielded empty priors"
-    assert label and re.fullmatch(r"BENCH_HISTORY\.jsonl:r\d+", label)
-
-
-def test_adjudicated_flag_suppressed_inside_envelope():
-    # the p_sort_desc_rank shape: prior round measured the warm-protocol
-    # floor (~0.33), this round the cold one (~0.52) — a 1.57x median
-    # ratio with best-of inside the adjudicated envelope must move to
-    # adjudicated_flags, not regressions
-    from bench import ADJUDICATIONS
-
-    prior = dict(PRIOR)
-    prior["p_sort_desc_rank"] = 0.33
-    medians = dict(PRIOR)
-    medians["p_sort_desc_rank"] = 0.52
-    bests = {n: 0.8 for n in PRIOR}
-    bests["p_sort_desc_rank"] = 0.44
-    prior_bests = {n: 0.8 for n in PRIOR}
-    prior_bests["p_sort_desc_rank"] = 0.31
-    flags = compute_regression_flags(
-        medians, prior, bests, prior_bests,
-        sf=0.1, adjudications=ADJUDICATIONS,
-    )
-    assert flags["regressions"] == {}
-    assert list(flags["adjudicated"]) == ["p_sort_desc_rank"]
-    assert "SCALE.md" in flags["adjudicated"]["p_sort_desc_rank"][
-        "adjudication"
-    ]
-
-
-def test_adjudication_does_not_cover_other_sf():
-    # the envelope is a sf0.1 measurement; a sf1 flag must NOT be eaten
-    from bench import ADJUDICATIONS
-
-    prior = dict(PRIOR)
-    prior["p_sort_desc_rank"] = 0.33
-    medians = dict(PRIOR)
-    medians["p_sort_desc_rank"] = 0.52
-    bests = {n: 0.8 for n in PRIOR}
-    bests["p_sort_desc_rank"] = 0.44
-    prior_bests = dict(bests)
-    prior_bests["p_sort_desc_rank"] = 0.31
-    flags = compute_regression_flags(
-        medians, prior, bests, prior_bests,
-        sf=1.0, adjudications=ADJUDICATIONS,
-    )
-    assert list(flags["regressions"]) == ["p_sort_desc_rank"]
-    assert flags["adjudicated"] == {}
-
-
-def test_genuine_slowdown_outside_envelope_still_flags():
-    # a deliberate 1.3x slowdown pushing the query OUT of its adjudicated
-    # band (median above the band max, best above best_max) must flag as
-    # a normal regression — the adjudication is an envelope, not a mute
-    from bench import ADJUDICATIONS
-
-    band_hi = ADJUDICATIONS["p_sort_desc_rank"]["median_band"][1]
-    best_max = ADJUDICATIONS["p_sort_desc_rank"]["best_max"]
-    prior = dict(PRIOR)
-    prior["p_sort_desc_rank"] = 0.52
-    medians = dict(PRIOR)
-    medians["p_sort_desc_rank"] = round(band_hi * 1.3, 3)
-    bests = {n: 0.8 for n in PRIOR}
-    bests["p_sort_desc_rank"] = round(best_max * 1.3, 3)
-    prior_bests = {n: 0.8 for n in PRIOR}
-    prior_bests["p_sort_desc_rank"] = 0.44
-    flags = compute_regression_flags(
-        medians, prior, bests, prior_bests,
-        sf=0.1, adjudications=ADJUDICATIONS,
-    )
-    assert list(flags["regressions"]) == ["p_sort_desc_rank"]
-    assert flags["adjudicated"] == {}
-    # and a non-adjudicated query slowed 1.3x still flags regardless
-    medians2 = dict(PRIOR)
-    medians2["q5"] = 1.31
-    flags2 = compute_regression_flags(
-        medians2, PRIOR, sf=0.1, adjudications=ADJUDICATIONS,
-    )
-    assert list(flags2["regressions"]) == ["q5"]
-
-
-def test_history_protocol_like_for_like(tmp_path):
-    # a warm-validation line (different protocol) must never become the
-    # fresh-process baseline; legacy lines without the field count as
-    # fresh-process (they were all written by bench.py's full run)
-    import json
-
-    from bench import append_history, load_history_priors
-
-    here = str(tmp_path)
-    append_history(here, 11, 0.1, {"q1": 1.0}, {})
-    path = tmp_path / "BENCH_HISTORY.jsonl"
-    lines = [json.loads(ln) for ln in path.read_text().splitlines()]
-    assert lines[-1]["protocol"] == "bench-full-fresh-process"
-    # splice in a newer warm-validation record by hand
-    lines.append({"round": 12, "sf": 0.1, "query_medians": {"q1": 0.3},
-                  "protocol": "warm-validation"})
-    path.write_text("\n".join(json.dumps(r) for r in lines) + "\n")
-    rec, label = load_history_priors(here, 0.1)
-    assert rec["query_medians"] == {"q1": 1.0}
-    assert label == "BENCH_HISTORY.jsonl:r11"
+    argv, env = arm_python(str(root), {**os.environ, "PYTHONPATH": here})
+    assert env["PYTHONPATH"].split(os.pathsep)[:2] == [str(root), here]
+    assert env["SPARK_GRAFT_CPUS"]
+    out = subprocess.run(
+        argv + ["-c", "import sys, victorialogs_spark as v;"
+                      " print(sys.path[0]); print(v.__file__)"],
+        env=env, cwd=str(root), stdout=subprocess.PIPE, text=True, check=True,
+    ).stdout.splitlines()
+    assert out[0] == str(root)
+    assert out[1] == str(root / "victorialogs_spark" / "__init__.py")

@@ -485,7 +485,7 @@ def token_ngram_hashes_arrow(c_name: str, n: int = 3):
     longer a linear function of the token hashes. Cost: five vector ops
     per batch.
 
-    Measured (r15 wave 6, tools/ab_gram_poly.py interleaved): sf1
+    Measured (OPTIMIZATION_r15.md "Wave 6", interleaved A/B): sf1
     gram+explode best 1.618 → 0.833 s (0.52×), dp_ngram_jaccard best
     3.76 → 2.31 s (0.61×); sf0.1 a wash (short docs — the per-doc
     Python slicing overhead offsets the vectorized fold). Adopted on
